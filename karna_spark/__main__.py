@@ -74,6 +74,7 @@ def main(argv: list[str] | None = None) -> int:
         return 2
 
     from karna_spark.catalog import load_fixture_tables, register
+    from karna_spark.scope import query_scope
     from karna_spark.session import get_spark
 
     spark = get_spark(app_name="karna-cli")
@@ -93,6 +94,13 @@ def main(argv: list[str] | None = None) -> int:
         else:
             register(spark, name, path)
 
+    # every intermediate the query pins is released once it is printed
+    with query_scope():
+        return _answer(spark, ms, args)
+
+
+def _answer(spark, ms, args) -> int:
+    """Translate ``args.query`` and print its bounded result."""
     try:
         if args.graphql:
             from karna_spark.frontends.graphql import (
@@ -128,19 +136,12 @@ def main(argv: list[str] | None = None) -> int:
         ))
         return 0
 
-    from karna_spark.operators.dedup import release_intermediates
-
-    try:
-        if args.fmt == "table":
-            df.show(args.limit, truncate=False)
-            return 0
-        for row in df.limit(args.limit).collect():
-            print(json.dumps(row.asDict(recursive=True), default=str, sort_keys=True))
+    if args.fmt == "table":
+        df.show(args.limit, truncate=False)
         return 0
-    finally:
-        # Drop any operator-persisted intermediates now that the
-        # result is materialized (see operators/dedup.py).
-        release_intermediates(df)
+    for row in df.limit(args.limit).collect():
+        print(json.dumps(row.asDict(recursive=True), default=str, sort_keys=True))
+    return 0
 
 
 if __name__ == "__main__":

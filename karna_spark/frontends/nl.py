@@ -326,24 +326,30 @@ def _sql_literal(raw: str) -> str:
     return "'" + raw.replace("'", "''") + "'"
 
 
+# A filter opens with where/whose/with, or continues the previous one
+# with 'and' (optionally 'and where').
+_FILTER_LEAD = r"(?:(?:\band\s+)?(?:where|whose|with)|\band)\s+"
 _FILTER_PATTERNS: list[tuple[re.Pattern, str]] = [
     (
         re.compile(
-            r"(?:where|whose|with)\s+(?P<col>[\w ]+?)\s+(?:is|equals|=)\s+(?P<val>'[^']*'|\"[^\"]*\"|\S+)",
+            _FILTER_LEAD
+            + r"(?P<col>[\w ]+?)\s+(?:is|equals|=)\s+(?P<val>'[^']*'|\"[^\"]*\"|\S+)",
             re.IGNORECASE,
         ),
         "=",
     ),
     (
         re.compile(
-            r"(?:where|with)\s+(?P<col>[\w ]+?)\s+(?:over|above|at least|greater than)\s+(?P<val>-?[\d.]+)",
+            _FILTER_LEAD
+            + r"(?P<col>[\w ]+?)\s+(?:over|above|at least|greater than)\s+(?P<val>-?[\d.]+)",
             re.IGNORECASE,
         ),
         ">=",
     ),
     (
         re.compile(
-            r"(?:where|with)\s+(?P<col>[\w ]+?)\s+(?:under|below|at most|less than)\s+(?P<val>-?[\d.]+)",
+            _FILTER_LEAD
+            + r"(?P<col>[\w ]+?)\s+(?:under|below|at most|less than)\s+(?P<val>-?[\d.]+)",
             re.IGNORECASE,
         ),
         "<=",
@@ -368,6 +374,12 @@ def _parse_filters(
         col = resolve_column(table, m.group("col"), vocab)
         out.append(f"{table}.{col} {op} {_sql_literal(m.group('val'))}")
         text = text[: m.start()] + text[m.end() :]
+    if text.strip():
+        # never run a question with part of its filter dropped
+        raise NLError(
+            f"cannot read {text.strip()!r} as a filter — filters look like "
+            "'where <column> is|over|under <value>', joined by 'and'"
+        )
     return out
 
 

@@ -56,6 +56,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from karna_spark.scope import pin, query_scope
+
 
 @contextmanager
 def _no_partition_inference(spark: "SparkSession"):
@@ -964,29 +966,6 @@ class SnapshotStore:
         )
 
     @staticmethod
-    def _pin(df: DataFrame):
-        """Persist a multi-consumer verb input for the verb's duration
-        (r13, guide §5): an upsert/CDC delta is consumed 3-4 times per
-        commit — the affected-values collect, the anti-join key set,
-        the union into the write, and (spec-evolved) the merge-on-read
-        key probe — and without a cache every consumer re-runs the
-        caller's upstream plan, a per-commit fixed cost locally and
-        3 extra delta-source passes at 100 TB. Returns
-        ``(df, release)``; ``release()`` unpersists only what this
-        call persisted (an already-persisted caller frame is left
-        alone, storage decisions stay with the caller)."""
-        from pyspark.storagelevel import StorageLevel
-
-        try:
-            lvl = df.storageLevel
-            if lvl.useMemory or lvl.useDisk:
-                return df, (lambda: None)
-            df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        except Exception:
-            return df, (lambda: None)
-        return df, (lambda: df.unpersist())
-
-    @staticmethod
     def _affected_values(delta: DataFrame, pc: str) -> list[str]:
         vals = [r[0] for r in delta.select(pc).distinct().collect()]
         if any(v is None for v in vals):
@@ -1107,84 +1086,77 @@ class SnapshotStore:
         prev = prev_doc["partitions"]
         cur_spec = self._doc_specs(prev_doc)[-1]
         cur = cur_spec["col"]
-        # the delta feeds 3-4 consumers below — pin it (see _pin)
-        delta, _release = self._pin(delta)
-        try:
-            return self._upsert_pinned(
-                spark, delta, key_cols, validate_keys,
-                prev_v, prev_doc, v, prev, cur_spec, cur,
-            )
-        finally:
-            _release()
-
-    def _upsert_pinned(
-        self, spark, delta, key_cols, validate_keys,
-        prev_v, prev_doc, v, prev, cur_spec, cur,
-    ) -> int:
-        # S30b: under a composite spec the partition value is DERIVED
-        # (one string column computed from the spec's source fields) —
-        # the delta gains it here for affected-value discovery, and
-        # the physical write frame gains it again below from physical
-        # names. Single-column specs pass through unchanged.
-        dl, pc_l = self._with_spec_col(delta, prev_doc, logical=True)
-        affected = self._affected_values(dl, pc_l)
-        affected_keys = {self._mk_key(prev_doc, cur, a) for a in affected}
-        if validate_keys and prev:
-            prev_df, _ = self._with_spec_col(
-                self.read(spark, version=prev_v), prev_doc, logical=True
-            )
-            moved = (
-                prev_df
-                .withColumnRenamed(pc_l, "_prev_pc")
-                .select(*key_cols, "_prev_pc")
-                .join(dl.select(*key_cols, pc_l).distinct(), key_cols)
-                .filter(F.col("_prev_pc").cast("string") != F.col(pc_l).cast("string"))
-                .limit(1)
-                .collect()
-            )
-            if moved:
-                raise ValueError(
-                    f"upsert moves key {[moved[0][k] for k in key_cols]} "
-                    f"across partitions ({moved[0]['_prev_pc']!r} -> "
-                    f"{moved[0][pc_l]!r}); partition values are "
-                    "immutable per key"
+        # The delta is consumed 3-4 times per commit (the affected-
+        # values collect, the anti-join key set, the union into the
+        # write, the merge-on-read key probe); without a cache each
+        # consumer re-runs the caller's upstream plan. Pin it for this
+        # verb only.
+        with query_scope():
+            delta = pin(delta)
+            # S30b: under a composite spec the partition value is DERIVED
+            # (one string column computed from the spec's source fields) —
+            # the delta gains it here for affected-value discovery, and
+            # the physical write frame gains it again below from physical
+            # names. Single-column specs pass through unchanged.
+            dl, pc_l = self._with_spec_col(delta, prev_doc, logical=True)
+            affected = self._affected_values(dl, pc_l)
+            affected_keys = {self._mk_key(prev_doc, cur, a) for a in affected}
+            if validate_keys and prev:
+                prev_df, _ = self._with_spec_col(
+                    self.read(spark, version=prev_v), prev_doc, logical=True
                 )
-        existing = self.read(
-            spark,
-            version=prev_v,
-            partition_values=[k for k in sorted(affected_keys) if k in prev],
-        )
-        keep = existing.join(delta.select(*key_cols).distinct(), key_cols, "left_anti")
-        merged = keep.unionByName(delta)
-        cm = prev_doc.get("colmap")
-        wdf = self._to_physical(merged, cm)
-        if cur_spec.get("fields"):
-            wdf = wdf.withColumn(
-                cur, self._spec_expr(prev_doc, cur_spec, logical=False)
+                moved = (
+                    prev_df
+                    .withColumnRenamed(pc_l, "_prev_pc")
+                    .select(*key_cols, "_prev_pc")
+                    .join(dl.select(*key_cols, pc_l).distinct(), key_cols)
+                    .filter(F.col("_prev_pc").cast("string") != F.col(pc_l).cast("string"))
+                    .limit(1)
+                    .collect()
+                )
+                if moved:
+                    raise ValueError(
+                        f"upsert moves key {[moved[0][k] for k in key_cols]} "
+                        f"across partitions ({moved[0]['_prev_pc']!r} -> "
+                        f"{moved[0][pc_l]!r}); partition values are "
+                        "immutable per key"
+                    )
+            existing = self.read(
+                spark,
+                version=prev_v,
+                partition_values=[k for k in sorted(affected_keys) if k in prev],
             )
-        written = self._write(wdf, v, spec_col=cur)
-        manifest = {k: pv for k, pv in prev.items() if k not in affected_keys}
-        manifest.update({self._mk_key(prev_doc, cur, a): v for a in written})
-        deletes = self._carry_deletes(prev_doc, affected_keys) or []
-        mor = self._retire_old_spec_rows(
-            spark, prev_v, prev_doc, delta.select(*key_cols).distinct(),
-            key_cols, v,
-        )
-        if mor:
-            deletes.append(mor)
-        self._publish(
-            v,
-            manifest,
-            schema_json=merged.schema.json(),
-            base_version=prev_v,
-            stats=self._inherit_stats(prev_v, manifest, written, v, prev_doc),
-            deletes=deletes or None,
-            colmap=cm,
-            defaults=prev_doc.get("defaults"),
-            specs=prev_doc.get("specs"),
-            op="upsert",
-        )
-        return v
+            keep = existing.join(delta.select(*key_cols).distinct(), key_cols, "left_anti")
+            merged = keep.unionByName(delta)
+            cm = prev_doc.get("colmap")
+            wdf = self._to_physical(merged, cm)
+            if cur_spec.get("fields"):
+                wdf = wdf.withColumn(
+                    cur, self._spec_expr(prev_doc, cur_spec, logical=False)
+                )
+            written = self._write(wdf, v, spec_col=cur)
+            manifest = {k: pv for k, pv in prev.items() if k not in affected_keys}
+            manifest.update({self._mk_key(prev_doc, cur, a): v for a in written})
+            deletes = self._carry_deletes(prev_doc, affected_keys) or []
+            mor = self._retire_old_spec_rows(
+                spark, prev_v, prev_doc, delta.select(*key_cols).distinct(),
+                key_cols, v,
+            )
+            if mor:
+                deletes.append(mor)
+            self._publish(
+                v,
+                manifest,
+                schema_json=merged.schema.json(),
+                base_version=prev_v,
+                stats=self._inherit_stats(prev_v, manifest, written, v, prev_doc),
+                deletes=deletes or None,
+                colmap=cm,
+                defaults=prev_doc.get("defaults"),
+                specs=prev_doc.get("specs"),
+                op="upsert",
+            )
+            return v
 
     def _retire_old_spec_rows(
         self,
@@ -1247,10 +1219,8 @@ class SnapshotStore:
         # the distinct, paying the old-spec scan twice plus a
         # write+read round-trip even when NOTHING matched (the common
         # steady-state on a mostly-migrated table).
-        from pyspark.storagelevel import StorageLevel
-
-        matched = matched.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
+        with query_scope():
+            matched = pin(matched)
             touched = sorted(
                 r["_pval"]
                 for r in matched.select("_pval").distinct().collect()
@@ -1259,8 +1229,6 @@ class SnapshotStore:
                 return None
             ddir = self._ddir(v)
             matched.coalesce(1).write.mode("overwrite").parquet(ddir)
-        finally:
-            matched.unpersist()
         return {
             "id": v,
             "partitions": touched,
@@ -1321,61 +1289,50 @@ class SnapshotStore:
         prev = prev_doc["partitions"]
         cur_spec = self._doc_specs(prev_doc)[-1]
         cur = cur_spec["col"]
-        # the change feed feeds 3-4 consumers below — pin it (_pin)
-        changes, _release = self._pin(changes)
-        try:
-            return self._apply_changes_pinned(
-                spark, changes, key_cols, op_col, _op,
-                prev_v, prev_doc, v, prev, cur_spec, cur,
+        # the change feed has the delta's 3-4 consumers (see upsert)
+        with query_scope():
+            changes = pin(changes)
+            # S30b: composite specs derive the partition value (see upsert)
+            ch, pc_l = self._with_spec_col(changes, prev_doc, logical=True)
+            affected = self._affected_values(ch, pc_l)
+            affected_keys = {self._mk_key(prev_doc, cur, a) for a in affected}
+            existing = self.read(
+                spark,
+                version=prev_v,
+                partition_values=[k for k in sorted(affected_keys) if k in prev],
             )
-        finally:
-            _release()
-
-    def _apply_changes_pinned(
-        self, spark, changes, key_cols, op_col, _op,
-        prev_v, prev_doc, v, prev, cur_spec, cur,
-    ) -> int:
-        # S30b: composite specs derive the partition value (see upsert)
-        ch, pc_l = self._with_spec_col(changes, prev_doc, logical=True)
-        affected = self._affected_values(ch, pc_l)
-        affected_keys = {self._mk_key(prev_doc, cur, a) for a in affected}
-        existing = self.read(
-            spark,
-            version=prev_v,
-            partition_values=[k for k in sorted(affected_keys) if k in prev],
-        )
-        keep = existing.join(changes.select(*key_cols).distinct(), key_cols, "left_anti")
-        upserts = changes.filter(F.col(op_col) != "D").drop(op_col)
-        merged = keep.unionByName(upserts)
-        cm = prev_doc.get("colmap")
-        wdf = self._to_physical(merged, cm)
-        if cur_spec.get("fields"):
-            wdf = wdf.withColumn(
-                cur, self._spec_expr(prev_doc, cur_spec, logical=False)
+            keep = existing.join(changes.select(*key_cols).distinct(), key_cols, "left_anti")
+            upserts = changes.filter(F.col(op_col) != "D").drop(op_col)
+            merged = keep.unionByName(upserts)
+            cm = prev_doc.get("colmap")
+            wdf = self._to_physical(merged, cm)
+            if cur_spec.get("fields"):
+                wdf = wdf.withColumn(
+                    cur, self._spec_expr(prev_doc, cur_spec, logical=False)
+                )
+            written = self._write(wdf, v, spec_col=cur)
+            manifest = {k: pv for k, pv in prev.items() if k not in affected_keys}
+            manifest.update({self._mk_key(prev_doc, cur, a): v for a in written})
+            deletes = self._carry_deletes(prev_doc, affected_keys) or []
+            mor = self._retire_old_spec_rows(
+                spark, prev_v, prev_doc,
+                changes.select(*key_cols).distinct(), key_cols, v,
             )
-        written = self._write(wdf, v, spec_col=cur)
-        manifest = {k: pv for k, pv in prev.items() if k not in affected_keys}
-        manifest.update({self._mk_key(prev_doc, cur, a): v for a in written})
-        deletes = self._carry_deletes(prev_doc, affected_keys) or []
-        mor = self._retire_old_spec_rows(
-            spark, prev_v, prev_doc,
-            changes.select(*key_cols).distinct(), key_cols, v,
-        )
-        if mor:
-            deletes.append(mor)
-        self._publish(
-            v,
-            manifest,
-            schema_json=merged.schema.json(),
-            base_version=prev_v,
-            stats=self._inherit_stats(prev_v, manifest, written, v, prev_doc),
-            deletes=deletes or None,
-            colmap=cm,
-            defaults=prev_doc.get("defaults"),
-            specs=prev_doc.get("specs"),
-            op=_op,
-        )
-        return v
+            if mor:
+                deletes.append(mor)
+            self._publish(
+                v,
+                manifest,
+                schema_json=merged.schema.json(),
+                base_version=prev_v,
+                stats=self._inherit_stats(prev_v, manifest, written, v, prev_doc),
+                deletes=deletes or None,
+                colmap=cm,
+                defaults=prev_doc.get("defaults"),
+                specs=prev_doc.get("specs"),
+                op=_op,
+            )
+            return v
 
     def rollback(self, version: int) -> int:
         """S34: roll the table back to ``version`` — Iceberg's

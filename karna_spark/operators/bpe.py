@@ -39,6 +39,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from karna_spark.scope import own
+
 END = "</w>"  # end-of-word marker symbol
 
 
@@ -134,7 +136,7 @@ _BATCH_TOP = 64
 
 
 def _accept_batch(
-    top: list, cutoff: int, min_pair_freq: int, budget: int
+    top: list, cutoff: int, min_pair_freq: int, budget: int, known: set[str]
 ) -> tuple[list[tuple[str, str, int]], bool]:
     """Greedy prefix of the rank-ordered top pairs that PROVABLY
     commutes with sequential BPE (r12 verdict item 1: batch k
@@ -167,7 +169,12 @@ def _accept_batch(
     nothing uncollected counts higher). Old pairs need no bound: their
     counts only ever decrease (destruction-only, by (a)'s analysis),
     and the candidate already outranks them in the original total
-    order, which is also the tie-break order.
+    order, which is also the tie-break order. That holds only while no
+    merge's string xy equals a symbol that already occurs (``known``:
+    the end marker and every merge learned before this batch) or one
+    an earlier merge of the batch made: such a merge ADDS occurrences
+    to old pairs around that symbol, so the batch stops right after
+    accepting it.
 
     The scan stops at the first candidate that fails (its post-merge
     count is unknowable from this collect); a VALIDATED candidate
@@ -196,6 +203,8 @@ def _accept_batch(
         if c < min_pair_freq:
             return accepted, True
         accepted.append((a, b, c))
+        if a + b in known or a + b in merged_strs:
+            break
         lefts.add(a)
         rights.add(b)
         merged_strs.add(a + b)
@@ -228,8 +237,8 @@ def learn_bpe(
     reaches ``min_pair_freq``. With ``return_symbols=True``, returns
     ``(merges, symbols_df)`` where symbols_df is the final
     (w, syms, freq) tokenization of every vocabulary word — the
-    word→tokens lookup a corpus tokenizer joins against (the caller
-    owns unpersisting its `_karna_persisted` handle).
+    word→tokens lookup a corpus tokenizer joins against, persisted
+    and released with the enclosing query (karna_spark/scope.py).
     """
     # ONE Spark job per BATCH of merges (r13; one per merge before):
     # the pair-count top-K collect is the only action, and it doubles
@@ -244,6 +253,7 @@ def learn_bpe(
     cached = syms    # persisted frame backing `syms`
     pending = None   # predecessor frame awaiting safe release
     merges: list[tuple[int, str, str, str, int]] = []
+    known = {END}  # every multi-character symbol that can occur
     # The adjacent-pair expression is loop-INVARIANT (it only names
     # columns); Column objects are immutable, so build it once —
     # rebuilding it per merge paid ~20 py4j round-trips × iterations
@@ -283,7 +293,7 @@ def learn_bpe(
                 break
             cutoff = int(top[-1]["cnt"]) if len(top) == _BATCH_TOP else 0
             accepted, done = _accept_batch(
-                top, cutoff, min_pair_freq, num_merges - len(merges)
+                top, cutoff, min_pair_freq, num_merges - len(merges), known
             )
             if not accepted:
                 break
@@ -291,6 +301,7 @@ def learn_bpe(
             expr_sql = "syms"
             for a, b, cnt in accepted:
                 merges.append((len(merges), a, b, a + b, cnt))
+                known.add(a + b)
                 expr_sql = _merge_sql(a, b, src=expr_sql)
             new_syms = syms.selectExpr(
                 "w", f"{expr_sql} AS syms", "freq"
@@ -324,13 +335,11 @@ def learn_bpe(
         raise
     if return_symbols:
         # Materialize the final tokenization before releasing its
-        # predecessor, then hand the persisted frame to the caller;
-        # the release contract rides on it (operators/dedup.py).
+        # predecessor, then hand the persisted frame to the query.
         if pending is not None:
             syms.count()
             pending.unpersist()
-        syms._karna_persisted = [cached]  # type: ignore[attr-defined]
-        return merges, syms
+        return merges, own(syms)
     if pending is not None:
         pending.unpersist()
     cached.unpersist()
@@ -343,7 +352,17 @@ def reference_bpe(
     """Pure-Python reference (independent of Spark) for the pytest
     differential: same counting (overlapping adjacent pairs), same
     greedy left-to-right merge, same tie-break."""
-    vocab = {tuple(list(w) + [END]): f for w, f in word_freqs.items()}
+    return _reference_merges(
+        {tuple(list(w) + [END]): f for w, f in word_freqs.items()},
+        num_merges,
+        min_pair_freq,
+    )
+
+
+def _reference_merges(
+    vocab: dict[tuple[str, ...], int], num_merges: int, min_pair_freq: int
+) -> list[tuple[int, str, str, str, int]]:
+    """:func:`reference_bpe` over an already-split symbol vocabulary."""
     merges: list[tuple[int, str, str, str, int]] = []
     for it in range(num_merges):
         counts: dict[tuple[str, str], int] = {}

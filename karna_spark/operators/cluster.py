@@ -171,12 +171,4 @@ def cluster_representatives(
     """Dedup keep/drop decision: (id, cluster_id, keep) where exactly
     the minimum id of each cluster is kept."""
     cc = connected_components(pairs, src_col, dst_col)
-    # connected_components returned an eagerly-materialized frame, so
-    # any caches the pair-detection pipeline registered on ``pairs``
-    # (e.g. minhash_lsh_pairs' src/candidate frames) are dead weight
-    # from here on — release them instead of leaking them for the
-    # session's lifetime. No-op for plain pair frames.
-    from karna_spark.operators.dedup import release_intermediates
-
-    release_intermediates(pairs)
     return cc.withColumn("keep", F.col("id") == F.col("cluster_id"))

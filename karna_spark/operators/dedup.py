@@ -27,11 +27,12 @@ import re
 
 import numpy as np
 import pandas as pd
-from pyspark import StorageLevel
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from karna_spark.functions.vector import cosine
+from karna_spark.scope import pin
 
 # ------------------------------------------------------------------ exact
 
@@ -354,7 +355,7 @@ def minhash_lsh_pairs(
     # without persistence the source is scanned + repartitioned twice
     # per run. MEMORY_AND_DISK: the id+text projection is far smaller
     # than the source rows, and spilling beats a second corpus scan.
-    src = src.persist(StorageLevel.MEMORY_AND_DISK)
+    src = pin(src)
     # Arrow-vectorized text → signature (see minhash_signature_text_udf:
     # one numpy sweep instead of num_perm interpreted passes per row).
     sig_udf = minhash_signature_text_udf(num_perm, shingle_n)
@@ -371,12 +372,12 @@ def minhash_lsh_pairs(
     # The cache is (id, band, band_hash) — 24 bytes × bands × docs —
     # scale-safe by the same argument as the candidate cache below;
     # at 100 TB this halves the signature compute outright.
-    banded = sig.select(
+    banded = pin(sig.select(
         "id",
         F.posexplode(lsh_band_keys(F.col("sig"), bands, rows_per_band)).alias(
             "band", "band_hash"
         ),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ))
     left = banded.select("band", "band_hash", F.col("id").alias("id_a"))
     right = banded.select("band", "band_hash", F.col("id").alias("id_b"))
     cands = (
@@ -393,8 +394,7 @@ def minhash_lsh_pairs(
     # over all three consumers would race them into evaluating the
     # signature+band-join pipeline once each before the cache blocks
     # exist — the pipeline's dominant cost, paid up to 3×.
-    cands = cands.persist(StorageLevel.MEMORY_AND_DISK)
-    cands_persisted = cands
+    cands = pin(cands)
     cands.count()
     # Exact-Jaccard verify, computed ONLY for docs that appear in a
     # candidate pair: semi-join the corpus down first, then shingle.
@@ -408,25 +408,19 @@ def minhash_lsh_pairs(
     # frame — uncached, the shingle fold over the candidate docs ran
     # twice (profiled as two ~20 task-second jobs). Bounded by
     # |candidate docs|, never the corpus.
-    sh = (
+    sh = pin(
         src.join(need, "id", "left_semi")
         .select("id", word_ngrams(F.col("text"), shingle_n).alias("shingles"))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    )
     cands = (
         cands.join(sh.select(F.col("id").alias("id_a"), F.col("shingles").alias("sh_a")), "id_a")
         .join(sh.select(F.col("id").alias("id_b"), F.col("shingles").alias("sh_b")), "id_b")
     )
-    out = (
+    return (
         cands.withColumn("jaccard", jaccard(F.col("sh_a"), F.col("sh_b")))
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    # Long-lived sessions (server, CLI REPL) must be able to release
-    # the cached blocks once the result is materialized; Spark's
-    # ContextCleaner only reclaims them on GC. Handles ride on the
-    # result; see release_intermediates().
-    out._karna_persisted = [cands_persisted, src, banded, sh]  # type: ignore[attr-defined]
-    return out
 
 
 def minhash_signature_table(
@@ -511,7 +505,7 @@ def minhash_lsh_incremental_pairs(
         if src.rdd.getNumPartitions() < sc.defaultParallelism:
             src = src.repartition(sc.defaultParallelism, "id")
         # Two consumers (signatures, verify re-shingle) — persist once.
-        src = src.persist(StorageLevel.MEMORY_AND_DISK)
+        src = pin(src)
         sig = src.select(
             "id", "is_new", sig_udf(F.col("text")).alias("sig")
         ).filter(F.col("sig").isNotNull())
@@ -526,7 +520,7 @@ def minhash_lsh_incremental_pairs(
         src = delta_rows.filter(~too_short)
         if src.rdd.getNumPartitions() < sc.defaultParallelism:
             src = src.repartition(sc.defaultParallelism, "id")
-        src = src.persist(StorageLevel.MEMORY_AND_DISK)
+        src = pin(src)
         sig = (
             base_signatures.select(
                 "id", F.lit(False).alias("is_new"), "sig"
@@ -563,8 +557,7 @@ def minhash_lsh_incremental_pairs(
         .select("new_id", "match_id")
         .dropDuplicates(["new_id", "match_id"])
     )
-    cands = cands.persist(StorageLevel.MEMORY_AND_DISK)
-    cands_persisted = cands
+    cands = pin(cands)
     cands.count()  # cache barrier before the three consumers below
     need = (
         cands.select(F.col("new_id").alias("id"))
@@ -574,10 +567,10 @@ def minhash_lsh_incremental_pairs(
     # PERSISTED (r13): both verify joins consume sh — uncached, the
     # candidate-doc shingle fold ran twice (same double-compute the
     # batch pipeline had; bounded by |candidate docs|).
-    sh = verify_text.join(need, "id", "left_semi").select(
+    sh = pin(verify_text.join(need, "id", "left_semi").select(
         "id", word_ngrams(F.col("text"), shingle_n).alias("shingles")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    verified = (
+    ))
+    return (
         cands.join(
             sh.select(F.col("id").alias("new_id"), F.col("shingles").alias("sh_a")),
             "new_id",
@@ -592,20 +585,6 @@ def minhash_lsh_incremental_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("new_id", "match_id", "jaccard")
     )
-    verified._karna_persisted = [cands_persisted, src, sh]  # type: ignore[attr-defined]
-    return verified
-
-
-def release_intermediates(result: DataFrame, blocking: bool = False) -> None:
-    """Unpersist the cached intermediates of an operator result.
-
-    Call after the returned DataFrame has been fully materialized
-    (collected / written). No-op for results without cached handles."""
-    for cached in getattr(result, "_karna_persisted", []):
-        try:
-            cached.unpersist(blocking)
-        except Exception:
-            pass
 
 
 # -------------------------------------------------------------- SimHash

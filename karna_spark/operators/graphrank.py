@@ -64,7 +64,7 @@ def triangle_counts(pairs: DataFrame) -> DataFrame:
     # union) and the orientation join; the degree frame feeds both
     # endpoint attachments and the final left join. Materialize each
     # once (lazy localCheckpoint — released with the frame by the
-    # ContextCleaner, the pagerank/bm25 pattern) so the upstream
+    # ContextCleaner, the pagerank pattern) so the upstream
     # edge-building scans run a single time.
     pairs = pairs.localCheckpoint(eager=False)
     deg = (
@@ -86,7 +86,7 @@ def triangle_counts(pairs: DataFrame) -> DataFrame:
     )
     # Oriented edges feed the wedge join twice and the closing join
     # once — materialize once (lazy localCheckpoint: released with the
-    # frame by the ContextCleaner, the pagerank/bm25 pattern).
+    # frame by the ContextCleaner, the pagerank pattern).
     oriented = oriented.localCheckpoint(eager=False)
     w1 = oriented.select(
         F.col("src").alias("u"), F.col("dst").alias("v"),
@@ -133,7 +133,7 @@ def pagerank_exact(
     outd = edges.groupBy("src").agg(F.count("*").alias("deg"))
     # Edge list + out-degrees is consumed once per iteration: a lazy
     # localCheckpoint materializes it at first action and lets the
-    # ContextCleaner release it with the frame (the bm25 pattern).
+    # ContextCleaner release it with the frame.
     edges_d = edges.join(outd, "src").localCheckpoint(eager=False)
 
     stats = nodes.agg(F.count("*").alias("n_nodes"))

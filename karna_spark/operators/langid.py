@@ -30,7 +30,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
+
+from karna_spark.scope import pin
 
 E6 = 1_000_000
 
@@ -65,17 +66,15 @@ def train_bigram_model(
     explode runs exactly once no matter how many consumers (tot /
     vocab / V / model / floors) hang off it — unpersisted, Catalyst
     re-executes the corpus pass per consumer, a 4× scan at 100 TB.
-    The handle rides on the returned frames (``_karna_persisted``,
-    the repo's release contract).
+    The cache is pinned for the enclosing query (karna_spark/scope.py).
     """
-    cnt = (
+    cnt = pin(
         train.select(
             F.col(lang_col).alias("lang"),
             F.explode(char_bigrams(F.col(text_col))).alias("bg"),
         )
         .groupBy("lang", "bg")
         .agg(F.count(F.lit(1)).alias("c"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     tot = cnt.groupBy("lang").agg(F.sum("c").alias("tot"))
     vocab = cnt.select("bg").distinct()
@@ -105,8 +104,6 @@ def train_bigram_model(
             .alias("lp_e6"),
         )
     )
-    model._karna_persisted = [cnt]  # type: ignore[attr-defined]
-    floors._karna_persisted = [cnt]  # type: ignore[attr-defined]
     return model, floors
 
 

@@ -152,8 +152,7 @@ def train_hard_sigmoid_logreg(
         for r in grad:
             w[r["b"]] = w[r["b"]] + int(r["g"]) // (n * inv_lr)
     # every consumer of the cached feature frame is a completed
-    # collect by now — release the executors' cache immediately
-    # rather than riding the _karna_persisted contract (nothing
+    # collect by now — release the executors' cache immediately (nothing
     # downstream re-reads the TRAIN slice; scoring uses its own)
     feats.unpersist()
     raw.unpersist()

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from karna_spark.scope import pin
+
 
 def bm25_scores(
     docs: DataFrame,
@@ -54,13 +56,11 @@ def bm25_scores(
         .groupBy(id_col, "dl", "term")
         .agg(F.count("*").alias("tf"))
     )
-    # tf feeds both idf and the scored join; a lazy localCheckpoint
-    # materializes it once at first action (build stays action-free)
-    # and — unlike persist(), whose CacheManager entry would outlive
-    # this query with no unpersist hook — its blocks are released by
-    # the ContextCleaner as soon as the frame is garbage-collected.
-    # Bounded small: docs containing a query term × |terms| rows.
-    tf = tf.localCheckpoint(eager=False)
+    # tf feeds both idf and the scored join; the lazy pin materializes
+    # it once at first action (build stays action-free) and the query
+    # scope releases it (karna_spark/scope.py). Bounded small: docs
+    # containing a query term × |terms| rows.
+    tf = pin(tf)
     idf = (
         tf.groupBy("term")
         .agg(F.countDistinct(id_col).alias("df"))

@@ -29,6 +29,7 @@ from karna_spark.operators.dedup import (
 from karna_spark.operators.sizing import spread_scan
 from karna_spark.operators.text import fingerprint_md5
 from karna_spark.queries.registry import register_query, table
+from karna_spark.scope import pin
 
 # DuckDB spelling of the distinct-word-bigram shingle set.
 _SQL_BIGRAMS = (
@@ -483,15 +484,13 @@ def dedup_shared_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a = keep.select(F.col("g"), F.col("doc_id").alias("id_a"))
     b = keep.select(F.col("g"), F.col("doc_id").alias("id_b"))
-    out = (
+    return (
         a.join(b, "g")
         .where(F.col("id_a") < F.col("id_b"))
         .groupBy("id_a", "id_b")
         .agg(F.count("*").cast("bigint").alias("shared_grams"))
         .where(F.col("shared_grams") >= 3)
     )
-    out._karna_persisted = [grams]  # type: ignore[attr-defined]
-    return out
 
 
 def _posting_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -503,22 +502,18 @@ def _posting_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
     text passes instead of one. The count() pins the cache before the
     plan fans out (the lazy-persist race documented in
     operators/dedup.py). At 100 TB the cached frame spills to disk,
-    which still beats recomputing string ops; callers hand the
-    persisted handle back on the result for release."""
-    from pyspark.storagelevel import StorageLevel
-
+    which still beats recomputing string ops; the cache is released
+    with the enclosing query (karna_spark/scope.py)."""
     from karna_spark.operators.text import word_ngrams
-
-    from karna_spark.operators.sizing import spread_scan
 
     # spread_scan: the fixture file is single-row-group (unsplittable),
     # so the n-gram explosion would otherwise run single-task while the
     # box idles; no-op on any real multi-split table.
     docs = spread_scan(table(spark, sf_dir, "documents"))
-    grams = docs.select(
+    grams = pin(docs.select(
         "doc_id",
         F.explode(F.array_distinct(word_ngrams(F.col("text"), 5))).alias("g"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ))
     grams.count()
     return grams
 
@@ -584,7 +579,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sa = sizes.select(F.col("doc_id").alias("id_a"), F.col("n_grams").alias("na"))
     sb = sizes.select(F.col("doc_id").alias("id_b"), F.col("n_grams").alias("nb"))
-    out = (
+    return (
         pairs.join(sa, "id_a")
         .join(sb, "id_b")
         .where(5 * F.col("shared_grams") >= 3 * F.least("na", "nb"))
@@ -596,8 +591,6 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("shared_grams").cast("double") / F.col("nb"), 4).alias("cont_b"),
         )
     )
-    out._karna_persisted = [grams]  # type: ignore[attr-defined]
-    return out
 
 
 @register_query(
@@ -705,7 +698,7 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams = _posting_grams(spark, sf_dir)
     firsts = grams.groupBy("g").agg(F.min("doc_id").alias("first_doc"))
     novel = (F.col("doc_id") == F.col("first_doc")).cast("bigint")
-    out = (
+    return (
         grams.join(firsts, "g")
         .groupBy("doc_id")
         .agg(
@@ -721,5 +714,3 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("novelty"),
         )
     )
-    out._karna_persisted = [grams]  # type: ignore[attr-defined]
-    return out

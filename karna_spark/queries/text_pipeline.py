@@ -29,6 +29,7 @@ from karna_spark.operators.text import (
 from karna_spark.operators.sizing import spread_scan
 from karna_spark.queries.parity import literal_frame
 from karna_spark.queries.registry import register_query, table
+from karna_spark.scope import pin
 
 
 def _sql_markers(code: str) -> str:
@@ -613,15 +614,9 @@ def text_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     classical way (unnest → count → row_number). Cross-row sums are
     integer (round(x*1e4) BIGINT) so the hash is partition-order
     independent."""
-    from karna_spark.operators.sizing import spread_scan
     from karna_spark.operators.text import repetition_features
 
-    # r13 (verdict item 8): the per-doc sorted-word fold is the
-    # compute; a single-row-group fixture scan ran it on one core
-    # (8-core/32-core ratio was 1.28 — no parallelism at all).
-    # Project to the two used columns first so the spread exchange
-    # moves only what the fold needs (guide §2.3).
-    d = spread_scan(table(spark, sf_dir, "documents").select("lang", "text"))
+    d = table(spark, sf_dir, "documents")
     f = repetition_features(F.col("text"))
     feat = d.select(
         "lang",
@@ -1301,9 +1296,7 @@ def text_bpe_merges_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("total_bpe_tokens"),
     )
-    out = mdf.crossJoin(F.broadcast(stats))
-    out._karna_persisted = getattr(syms, "_karna_persisted", [])  # type: ignore[attr-defined]
-    return out
+    return mdf.crossJoin(F.broadcast(stats))
 
 
 def text_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1366,7 +1359,7 @@ def text_bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("lang", "w")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    out = (
+    return (
         per_lang.join(tok_map, "w")
         .groupBy("lang")
         .agg(
@@ -1386,8 +1379,6 @@ def text_bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("avg_tokens_per_word"),
         )
     )
-    out._karna_persisted = getattr(syms, "_karna_persisted", [])  # type: ignore[attr-defined]
-    return out
 
 
 @register_query(
@@ -1535,16 +1526,11 @@ def text_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         lambda g: F.concat_ws(" ", F.slice(ws, g * 2 + 1, 2)),
     )
-    from pyspark.storagelevel import StorageLevel
-
     # Persist the segment explosion once — three consumers (df counts,
     # the anti-probe, per-doc totals) would otherwise each re-scan and
     # re-split the corpus text (the _posting_grams pattern; count()
-    # pins the cache before the plan fans out, caller releases via the
-    # _karna_persisted contract).
-    seg_rows = docs.select(
-        "doc_id", F.posexplode(segs).alias("g", "seg")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    # pins the cache before the plan fans out).
+    seg_rows = pin(docs.select("doc_id", F.posexplode(segs).alias("g", "seg")))
     seg_rows.count()
     boiler = (
         seg_rows.select("seg", "doc_id")
@@ -1572,14 +1558,12 @@ def text_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ).alias("cleaned_text"),
     )
-    out = tot.join(reb, "doc_id", "left").select(
+    return tot.join(reb, "doc_id", "left").select(
         "doc_id",
         "n_segs",
         F.coalesce(F.col("n_kept"), F.lit(0)).alias("n_kept"),
         F.coalesce(F.col("cleaned_text"), F.lit("")).alias("cleaned_text"),
     )
-    out._karna_persisted = [seg_rows]  # type: ignore[attr-defined]
-    return out
 
 
 @register_query(
@@ -1667,8 +1651,6 @@ def text_duplicate_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     Lee et al. 2021, "Deduplicating Training Data Makes Language Models
     Better") — not a declared reference surface.
     """
-    from pyspark.storagelevel import StorageLevel
-
     from karna_spark.operators.text import words
 
     K = 8
@@ -1679,14 +1661,12 @@ def text_duplicate_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     # split ran twice per run (once per consumer). The cache holds
     # (doc_id, text, ws) — one corpus pass's projection, the same
     # MEMORY_AND_DISK posture as minhash's src cache.
-    base = docs.select("doc_id", "text", ws.alias("ws")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    base = pin(docs.select("doc_id", "text", ws.alias("ws")))
     n = F.size(F.col("ws"))
     # (doc_id, s 1-based, g) for every K-token window; persisted once
     # (dup detection + hit projection consume it; the _posting_grams
-    # pattern, released via the _karna_persisted contract).
-    grams = (
+    # pattern).
+    grams = pin(
         base.filter(n >= K)
         .select(
             "doc_id",
@@ -1703,7 +1683,6 @@ def text_duplicate_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
             "g",
             F.xxhash64("g").alias("h"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     grams.count()
     # Phase 1: hash-level df — the only corpus-scale shuffle, 8-byte keys.
@@ -1730,7 +1709,7 @@ def text_duplicate_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(MERGE_INTERVALS_EXPR).alias("spans")
     )
     kept_ws = drop_spans(F.col("ws"), F.col("spans"))
-    out = base.join(merged, "doc_id", "left").select(
+    return base.join(merged, "doc_id", "left").select(
         "doc_id",
         F.when(F.col("spans").isNull(), F.concat_ws(" ", F.col("ws")))
         .otherwise(F.concat_ws(" ", kept_ws))
@@ -1740,8 +1719,6 @@ def text_duplicate_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("int")
         .alias("n_removed"),
     )
-    out._karna_persisted = [grams, base]  # type: ignore[attr-defined]
-    return out
 
 
 @register_query(
@@ -2645,7 +2622,7 @@ def text_lang_id_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     test = d.filter(F.col("doc_id") % 2 == 1)
     model, floors = train_bigram_model(train, "text", "lang")
     pred = classify(test, model, floors, "doc_id", "text")
-    out = (
+    return (
         pred.join(test.select("doc_id", F.col("lang").alias("lang_true")), "doc_id")
         .groupBy("lang_true", "lang_pred")
         .agg(
@@ -2653,8 +2630,6 @@ def text_lang_id_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("score_e6").cast("bigint").alias("sum_score_e6"),
         )
     )
-    out._karna_persisted = getattr(model, "_karna_persisted", [])  # type: ignore[attr-defined]
-    return out
 
 
 # ---------------------------------------------------------------- J20

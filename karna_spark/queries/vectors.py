@@ -14,6 +14,7 @@ from karna_spark.operators.similarity import (
 )
 from karna_spark.operators.sizing import spread_scan
 from karna_spark.queries.registry import register_query, table
+from karna_spark.scope import pin
 
 # Fixture embedding dimensionality (TESTDATA.md: embeddings.embedding is
 # a 64-dim float vector). Passed explicitly so LSH plan construction
@@ -462,7 +463,6 @@ def similarity_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors are never re-assigned (the saved term is the
     O(|corpus|) assignment UDF)."""
     from pyspark.sql import Window as W
-    from pyspark.storagelevel import StorageLevel
 
     from karna_spark.operators.similarity import (
         ann_ivf_topk,
@@ -472,11 +472,8 @@ def similarity_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # PERSISTED (r13): emb feeds five consumers (stored-index build,
     # delta slice, centroid seed rows, the probed search, and the
     # brute-force recall referee) — uncached, each re-ran the spread
-    # exchange plus the scan. One pass's projection, released via
-    # _karna_persisted.
-    emb = spread_scan(table(spark, sf_dir, "embeddings")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    # exchange plus the scan. One pass's projection.
+    emb = pin(spread_scan(table(spark, sf_dir, "embeddings")))
     base = emb.filter(F.col("vec_id") % 50 != 0)
     delta = emb.filter(F.col("vec_id") % 50 == 0)
     cents = (
@@ -490,10 +487,8 @@ def similarity_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # The stored index: in production this is read back from a table
     # keyed/partitioned by bucket and appended per ingest; persist
-    # stands in for the store here (released via _karna_persisted).
-    idx = ivf_assignment_table(base, cents, "vec_id", "embedding").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    # stands in for the store here.
+    idx = pin(ivf_assignment_table(base, cents, "vec_id", "embedding"))
     idx.count()
     delta_asg = ivf_assignment_table(delta, cents, "vec_id", "embedding")
     ann = ann_ivf_topk(
@@ -507,9 +502,7 @@ def similarity_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         nprobe=3,
         corpus_assignments=idx.unionByName(delta_asg),
     )
-    out = _recall_vs_bruteforce(emb, delta, ann, k=10)
-    out._karna_persisted = [idx, emb]  # type: ignore[attr-defined]
-    return out
+    return _recall_vs_bruteforce(emb, delta, ann, k=10)
 
 
 @register_query(

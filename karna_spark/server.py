@@ -35,15 +35,25 @@ Scale posture: the server holds no result state; every /query collects
 at most ``limit`` rows (hard-capped) through a TakeOrderedAndProject
 plan, and Arrow handles the JVM→Python page transfer. Concurrency is
 ThreadingHTTPServer — Spark sessions are thread-safe for reads, and
-each request is an independent job.
+each request is an independent job. Each request runs in its own
+``query_scope`` (karna_spark/scope.py), so every intermediate an
+operator pinned for it is unpersisted before the response goes out.
+
+Errors: caller errors (bad body, front-end translation errors, Spark
+analysis/parse errors — every ``ValueError`` and ``AnalysisException``)
+answer 4xx; anything else is an engine failure and answers 500.
 """
 
 from __future__ import annotations
 
 import json
+import logging
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
+
+from karna_spark.scope import query_scope
 
 MAX_PAGE = 10_000  # hard cap on rows per response
 
@@ -146,8 +156,11 @@ def _run_query(spark: SparkSession, body: dict, metastore=None) -> DataFrame:
 def _page_payload(df: DataFrame, body: dict) -> dict:
     from karna_spark.io.sinks import page
 
-    limit = min(int(body.get("limit", 100)), MAX_PAGE)
-    offset = int(body.get("offset", 0))
+    try:
+        limit = min(int(body.get("limit", 100)), MAX_PAGE)
+        offset = int(body.get("offset", 0))
+    except (TypeError, ValueError) as e:
+        raise ApiError(400, f"limit/offset must be integers: {e}") from None
     order_by = body.get("order_by")
     if order_by:
         missing = [c for c in order_by if c not in df.columns]
@@ -159,17 +172,7 @@ def _page_payload(df: DataFrame, body: dict) -> dict:
         raise ApiError(400, "offset requires order_by for a stable page")
     else:
         out = df.limit(limit)
-    try:
-        rows = out.collect()
-    finally:
-        # Operators that persist intermediates for their own
-        # multi-consumer plans (posting-gram dedup, MinHash, CC) hang
-        # the cache handles on the result; a long-lived server must
-        # drop those blocks once the page is materialized or they
-        # accumulate across requests.
-        from karna_spark.operators.dedup import release_intermediates
-
-        release_intermediates(df)
+    rows = out.collect()
     return {
         "columns": out.columns,
         "rows": [[_json_cell(v) for v in r] for r in rows],
@@ -223,9 +226,12 @@ def create_server(
             if n == 0:
                 raise ApiError(400, "empty request body")
             try:
-                return json.loads(self.rfile.read(n))
+                body = json.loads(self.rfile.read(n))
             except json.JSONDecodeError as e:
                 raise ApiError(400, f"invalid JSON body: {e}") from e
+            if not isinstance(body, dict):
+                raise ApiError(400, "body must be a JSON object")
+            return body
 
         def do_GET(self):
             if self.path in ("/", "/index.html"):
@@ -269,8 +275,11 @@ def create_server(
             try:
                 body = self._body()
                 if self.path == "/query":
-                    df = _run_query(spark, body, metastore)
-                    return self._send(200, _page_payload(df, body))
+                    # released before the response goes out
+                    with query_scope():
+                        df = _run_query(spark, body, metastore)
+                        payload = _page_payload(df, body)
+                    return self._send(200, payload)
                 if self.path == "/datasets":
                     name, path = body.get("name"), body.get("path")
                     if not name or not path:
@@ -298,8 +307,11 @@ def create_server(
                 return self._send(404, {"error": f"no route {self.path}"})
             except ApiError as e:
                 return self._send(e.status, {"error": str(e)})
-            except Exception as e:  # translator/analysis errors → 400
+            except (ValueError, AnalysisException) as e:  # caller errors
                 return self._send(400, {"error": f"{type(e).__name__}: {e}"})
+            except Exception as e:  # engine failures
+                logging.getLogger(__name__).exception("POST %s failed", self.path)
+                return self._send(500, {"error": f"{type(e).__name__}: {e}"})
 
     return ThreadingHTTPServer((host, port), Handler)
 

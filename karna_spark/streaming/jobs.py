@@ -618,40 +618,41 @@ def foreachbatch_incremental_dedup(
     from karna_spark.operators.dedup import (
         minhash_lsh_incremental_pairs,
         minhash_signature_table,
-        release_intermediates,
     )
+    from karna_spark.scope import pin, query_scope
 
     sig_dir = os.path.join(state_root, "sigs")
     corpus_dir = os.path.join(state_root, "corpus")
     pairs_dir = os.path.join(state_root, "pairs")
 
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.localCheckpoint(eager=True)
-        have_state = os.path.isdir(sig_dir)
-        if have_state:
-            sigs = spark.read.parquet(sig_dir)
-            corpus = spark.read.parquet(corpus_dir).select("doc_id", "text")
-            pairs = minhash_lsh_incremental_pairs(
-                corpus, batch_df, "doc_id", "text", base_signatures=sigs
+        # the batch and the probe's pins are released per micro-batch
+        with query_scope():
+            batch_df = pin(batch_df)
+            have_state = os.path.isdir(sig_dir)
+            if have_state:
+                sigs = spark.read.parquet(sig_dir)
+                corpus = spark.read.parquet(corpus_dir).select("doc_id", "text")
+                pairs = minhash_lsh_incremental_pairs(
+                    corpus, batch_df, "doc_id", "text", base_signatures=sigs
+                )
+            else:
+                pairs = minhash_lsh_incremental_pairs(
+                    batch_df.limit(0), batch_df, "doc_id", "text"
+                )
+            (
+                pairs.withColumn("batch_id", F.lit(batch_id).cast("int"))
+                .write.mode("append")
+                .parquet(pairs_dir)
             )
-        else:
-            pairs = minhash_lsh_incremental_pairs(
-                batch_df.limit(0), batch_df, "doc_id", "text"
+            (
+                minhash_signature_table(batch_df, "doc_id", "text")
+                .write.mode("append")
+                .parquet(sig_dir)
             )
-        (
-            pairs.withColumn("batch_id", F.lit(batch_id).cast("int"))
-            .write.mode("append")
-            .parquet(pairs_dir)
-        )
-        release_intermediates(pairs)
-        (
-            minhash_signature_table(batch_df, "doc_id", "text")
-            .write.mode("append")
-            .parquet(sig_dir)
-        )
-        batch_df.select("doc_id", "text").write.mode("append").parquet(
-            corpus_dir
-        )
+            batch_df.select("doc_id", "text").write.mode("append").parquet(
+                corpus_dir
+            )
 
     stream = documents_stream(spark, landing_dir)
     q = (

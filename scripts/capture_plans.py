@@ -51,7 +51,7 @@ def main() -> None:
     orig_ckpt = DataFrame.localCheckpoint
     state = {"name": "", "n": 0}
 
-    def traced_ckpt(self, eager=True):
+    def traced_ckpt(self, *a, **kw):
         state["n"] += 1
         path = os.path.join(
             outdir, f"{state['name']}_{tag}_ckpt{state['n']}.txt"
@@ -63,7 +63,7 @@ def main() -> None:
             print(f"wrote {path} ({len(plan)} bytes)")
         except Exception as exc:  # capture must never break the builder
             print(f"ckpt plan capture failed: {exc}", file=sys.stderr)
-        return orig_ckpt(self, eager=eager)
+        return orig_ckpt(self, *a, **kw)
 
     DataFrame.localCheckpoint = traced_ckpt
     try:

@@ -161,8 +161,8 @@ def main() -> None:
         minhash_lsh_incremental_pairs,
         minhash_lsh_pairs,
         minhash_signature_table,
-        release_intermediates,
     )
+    from karna_spark.scope import query_scope
     from karna_spark.operators.similarity import (
         ann_bruteforce_topk,
         ann_hamming_rerank,
@@ -201,18 +201,16 @@ def main() -> None:
                 sigs = spark.read.parquet(sig_path)
 
                 def ingest_stored():
-                    out = minhash_lsh_incremental_pairs(
-                        corpus, batch, "doc_id", "text", base_signatures=sigs
-                    )
-                    noop(out)
-                    release_intermediates(out)
+                    with query_scope():
+                        noop(minhash_lsh_incremental_pairs(
+                            corpus, batch, "doc_id", "text", base_signatures=sigs
+                        ))
 
                 def ingest_naive():
-                    out = minhash_lsh_pairs(
-                        corpus.unionByName(batch), "doc_id", "text"
-                    )
-                    noop(out)
-                    release_intermediates(out)
+                    with query_scope():
+                        noop(minhash_lsh_pairs(
+                            corpus.unionByName(batch), "doc_id", "text"
+                        ))
 
                 stored_s = timed(ingest_stored, args.reps)
                 naive_s = timed(ingest_naive, args.reps)

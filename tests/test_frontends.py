@@ -275,6 +275,27 @@ def test_nl_roundtrip_sql_text():
     )
 
 
+def test_nl_and_joined_filters_all_apply():
+    """A second filter joined by a bare 'and' is applied, the same as
+    the documented 'and where' form; filter text the grammar cannot
+    read is refused instead of dropped."""
+    from karna_spark.frontends.nl import NLError, to_sql
+
+    head = "total quantity by nation name in lineitem where returnflag is R"
+    sql = to_sql(head + " and linestatus is O")
+    assert sql == to_sql(head + " and where linestatus is O")
+    assert (
+        "WHERE lineitem.l_returnflag = 'R' AND lineitem.l_linestatus = 'O' "
+        in sql
+    )
+    assert "lineitem.l_quantity >= 5" in to_sql(
+        head + " and quantity over 5"
+    )
+    for bad in (head + " or linestatus is O", head + " and linestatus"):
+        with pytest.raises(NLError, match="as a filter"):
+            to_sql(bad)
+
+
 def test_nl_join_dimension_forms():
     from karna_spark.frontends.nl import NLError, to_sql
 
@@ -412,15 +433,13 @@ def test_sql_guard_blocks_writes(fixtures):
 # ------------------------------------------------- operator-backed NL
 def test_nl_dedup_intent_phrasings_and_guard(fixtures):
     from karna_spark.frontends.nl import NLError, ask
+    from karna_spark.scope import query_scope
 
-    a = ask(fixtures, "find near-duplicate documents")
-    b = ask(fixtures, "Near duplicates in documents?")
-    rows_a = sorted((r["id_a"], r["id_b"]) for r in a.collect())
-    rows_b = sorted((r["id_a"], r["id_b"]) for r in b.collect())
-    from karna_spark.operators.dedup import release_intermediates
-
-    release_intermediates(a)
-    release_intermediates(b)
+    with query_scope():
+        a = ask(fixtures, "find near-duplicate documents")
+        b = ask(fixtures, "Near duplicates in documents?")
+        rows_a = sorted((r["id_a"], r["id_b"]) for r in a.collect())
+        rows_b = sorted((r["id_a"], r["id_b"]) for r in b.collect())
     assert rows_a and rows_a == rows_b  # phrasing-invariant dispatch
     # A table with no text-bearing column refuses with a clear error
     # instead of guessing a column.

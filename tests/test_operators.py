@@ -857,31 +857,31 @@ def test_incremental_minhash_store_path_matches_injob(spark):
     from karna_spark.operators.dedup import (
         minhash_lsh_incremental_pairs,
         minhash_signature_table,
-        release_intermediates,
     )
     from karna_spark.queries.registry import table
+    from karna_spark.scope import query_scope
 
     docs = table(spark, "/root/testdata/sf0.001", "documents")
     base = docs.filter(F.col("doc_id") % 10 != 0)
     delta = docs.filter(F.col("doc_id") % 10 == 0)
-    injob = minhash_lsh_incremental_pairs(base, delta, "doc_id", "text")
-    rows_a = sorted(
-        (r["new_id"], r["match_id"], round(r["jaccard"], 9))
-        for r in injob.collect()
-    )
-    release_intermediates(injob)
+    with query_scope():
+        injob = minhash_lsh_incremental_pairs(base, delta, "doc_id", "text")
+        rows_a = sorted(
+            (r["new_id"], r["match_id"], round(r["jaccard"], 9))
+            for r in injob.collect()
+        )
     sigs = minhash_signature_table(base, "doc_id", "text").persist(
         StorageLevel.MEMORY_AND_DISK
     )
     sigs.count()
-    store = minhash_lsh_incremental_pairs(
-        base, delta, "doc_id", "text", base_signatures=sigs
-    )
-    rows_b = sorted(
-        (r["new_id"], r["match_id"], round(r["jaccard"], 9))
-        for r in store.collect()
-    )
-    release_intermediates(store)
+    with query_scope():
+        store = minhash_lsh_incremental_pairs(
+            base, delta, "doc_id", "text", base_signatures=sigs
+        )
+        rows_b = sorted(
+            (r["new_id"], r["match_id"], round(r["jaccard"], 9))
+            for r in store.collect()
+        )
     sigs.unpersist()
     assert rows_a == rows_b
     assert len(rows_a) > 0
@@ -1010,7 +1010,7 @@ def test_kmeans_exact_matches_pure_python(spark):
     on the real sf0.001 embeddings — same quantization, same argmin
     tie-break, same round-half-up update, same empty-cluster carry."""
     from karna_spark.operators.kmeans import kmeans_lloyd_exact
-    from karna_spark.operators.dedup import release_intermediates
+    from karna_spark.scope import query_scope
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     rows = sorted(
@@ -1019,9 +1019,12 @@ def test_kmeans_exact_matches_pure_python(spark):
     )
     cents, counts = _kmeans_pure_python(rows, k=8, iters=3)
 
-    out = kmeans_lloyd_exact(spark, emb, "vec_id", "embedding", k=8, iters=3)
-    got = {(r["cluster_id"], r["dim"]): (r["coord_q"], r["n_points"]) for r in out.collect()}
-    release_intermediates(out)
+    with query_scope():
+        out = kmeans_lloyd_exact(spark, emb, "vec_id", "embedding", k=8, iters=3)
+        got = {
+            (r["cluster_id"], r["dim"]): (r["coord_q"], r["n_points"])
+            for r in out.collect()
+        }
     assert len(got) == 8 * 64
     for cid in range(8):
         for dim in range(64):
@@ -1035,14 +1038,14 @@ def test_kmeans_empty_cluster_carries_previous_centroid(spark):
     break to the lower id): its centroid must carry forward and report
     n_points=0 instead of vanishing or dividing by zero."""
     from karna_spark.operators.kmeans import kmeans_lloyd_exact
-    from karna_spark.operators.dedup import release_intermediates
+    from karna_spark.scope import query_scope
 
     df = spark.createDataFrame(
         [(0, [0.0]), (1, [0.0]), (2, [100.0])], "vec_id long, embedding array<double>"
     )
-    out = kmeans_lloyd_exact(spark, df, "vec_id", "embedding", k=2, iters=1)
-    rows = {r["cluster_id"]: (r["coord_q"], r["n_points"]) for r in out.collect()}
-    release_intermediates(out)
+    with query_scope():
+        out = kmeans_lloyd_exact(spark, df, "vec_id", "embedding", k=2, iters=1)
+        rows = {r["cluster_id"]: (r["coord_q"], r["n_points"]) for r in out.collect()}
     # Both centroids init to the same quantized zero, so every point
     # (including the 100) ties and breaks to cluster 0 — cluster 1 is
     # empty from the first assignment: centroid carried, population 0.
@@ -1057,12 +1060,12 @@ def test_kmeans_plan_is_codegen_map_no_python(spark):
     window, and the only wide node feeding the result is the (cid, dim)
     partial aggregate."""
     from karna_spark.operators.kmeans import kmeans_lloyd_exact
-    from karna_spark.operators.dedup import release_intermediates
+    from karna_spark.scope import query_scope
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    out = kmeans_lloyd_exact(spark, emb, "vec_id", "embedding", k=4, iters=2)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    release_intermediates(out)
+    with query_scope():
+        out = kmeans_lloyd_exact(spark, emb, "vec_id", "embedding", k=4, iters=2)
+        plan = out._jdf.queryExecution().executedPlan().toString()
     assert "EvalPython" not in plan
     assert "Window" not in plan
 
@@ -1356,64 +1359,67 @@ def test_sign_sketch_words_bit_exact(spark):
     assert (row.w0, row.w1) == (w0, w1)
 
 
+def _py_batched_bpe(vocab, num_merges, min_pair_freq=2):
+    """Pure-Python twin of learn_bpe's batched loop over a symbol
+    vocabulary {symbols tuple: freq} — same counts, same top-K, same
+    _accept_batch, same greedy application. ``known`` starts as every
+    multi-character symbol present (just the end marker for a
+    character-split vocabulary, as in learn_bpe)."""
+    from karna_spark.operators.bpe import _BATCH_TOP, _accept_batch
+
+    known = {s for syms in vocab for s in syms if len(s) > 1}
+    merges = []
+    done = False
+    while len(merges) < num_merges and not done:
+        counts: dict[tuple[str, str], int] = {}
+        for syms, f in vocab.items():
+            for i in range(len(syms) - 1):
+                p = (syms[i], syms[i + 1])
+                counts[p] = counts.get(p, 0) + f
+        if not counts:
+            break
+        ranked = sorted(
+            counts.items(), key=lambda kv: (-kv[1], kv[0])
+        )[:_BATCH_TOP]
+        top = [{"a": a, "b": b, "cnt": c} for (a, b), c in ranked]
+        if top[0]["cnt"] < min_pair_freq:
+            break
+        cutoff = top[-1]["cnt"] if len(top) == _BATCH_TOP else 0
+        accepted, done = _accept_batch(
+            top, cutoff, min_pair_freq, num_merges - len(merges), known
+        )
+        if not accepted:
+            break
+        for a, b, c in accepted:
+            merges.append((len(merges), a, b, a + b, c))
+            known.add(a + b)
+            new_vocab: dict[tuple[str, ...], int] = {}
+            for syms, f in vocab.items():
+                out: list[str] = []
+                for x in syms:
+                    if out and out[-1] == a and x == b:
+                        out[-1] = a + b
+                    else:
+                        out.append(x)
+                key = tuple(out)
+                new_vocab[key] = new_vocab.get(key, 0) + f
+            vocab = new_vocab
+    return merges
+
+
 def test_bpe_batched_merges_replay_sequential_reference():
     """r13 optimization: learn_bpe applies a BATCH of provably-
-    commuting merges per distributed count (see _accept_batch). This
-    pure-Python twin of the batched loop — same counts, same top-K,
-    same _accept_batch, same greedy application — must reproduce
-    reference_bpe EXACTLY on adversarial random corpora: tiny
-    alphabets force overlapping/chained/self-pairs ((a,a)), count
-    ties exercise the lexicographic tie-break, and string-colliding
-    merges (('a','bc') vs ('ab','c')) exercise the touched-symbol
-    guard. No Spark involved: this certifies the batching MATH; the
-    Spark differentials above certify the fold application."""
+    commuting merges per distributed count (see _accept_batch). The
+    pure-Python twin of the batched loop must reproduce reference_bpe
+    EXACTLY on adversarial random corpora: tiny alphabets force
+    overlapping/chained/self-pairs ((a,a)), count ties exercise the
+    lexicographic tie-break, and string-colliding merges (('a','bc')
+    vs ('ab','c')) exercise the touched-symbol guard. No Spark
+    involved: this certifies the batching MATH; the Spark
+    differentials above certify the fold application."""
     import random
 
-    from karna_spark.operators.bpe import (
-        _BATCH_TOP,
-        END,
-        _accept_batch,
-        reference_bpe,
-    )
-
-    def py_batched(freqs, num_merges, min_pair_freq=2):
-        vocab = {tuple(list(w) + [END]): f for w, f in freqs.items()}
-        merges = []
-        done = False
-        while len(merges) < num_merges and not done:
-            counts: dict[tuple[str, str], int] = {}
-            for syms, f in vocab.items():
-                for i in range(len(syms) - 1):
-                    p = (syms[i], syms[i + 1])
-                    counts[p] = counts.get(p, 0) + f
-            if not counts:
-                break
-            ranked = sorted(
-                counts.items(), key=lambda kv: (-kv[1], kv[0])
-            )[:_BATCH_TOP]
-            top = [{"a": a, "b": b, "cnt": c} for (a, b), c in ranked]
-            if top[0]["cnt"] < min_pair_freq:
-                break
-            cutoff = top[-1]["cnt"] if len(top) == _BATCH_TOP else 0
-            accepted, done = _accept_batch(
-                top, cutoff, min_pair_freq, num_merges - len(merges)
-            )
-            if not accepted:
-                break
-            for a, b, c in accepted:
-                merges.append((len(merges), a, b, a + b, c))
-                new_vocab: dict[tuple[str, ...], int] = {}
-                for syms, f in vocab.items():
-                    out: list[str] = []
-                    for x in syms:
-                        if out and out[-1] == a and x == b:
-                            out[-1] = a + b
-                        else:
-                            out.append(x)
-                    key = tuple(out)
-                    new_vocab[key] = new_vocab.get(key, 0) + f
-                vocab = new_vocab
-        return merges
+    from karna_spark.operators.bpe import END, reference_bpe
 
     rng = random.Random(20260818)
     n_batched_gt1 = 0
@@ -1426,12 +1432,34 @@ def test_bpe_batched_merges_replay_sequential_reference():
             for _ in range(rng.randint(10, 80))
         }
         want = reference_bpe(words, num_merges=30)
-        got = py_batched(words, num_merges=30)
+        got = _py_batched_bpe(
+            {tuple(list(w) + [END]): f for w, f in words.items()}, 30
+        )
         assert got == want, f"trial {trial} diverged: {got} != {want}"
         if len(got) > 1:
             n_batched_gt1 += 1
     # the generator must actually exercise multi-merge learning
     assert n_batched_gt1 > 100
+
+
+def test_bpe_batch_stops_when_merge_recreates_a_symbol():
+    """A merge whose string equals a symbol that already occurs ADDS
+    occurrences to the old pairs around that symbol, so later batch
+    candidates may no longer be the argmax. Here merging ('a','bc')
+    lifts ('abc','bc') from 20 to 33, past ('eb','b') at 31: the batch
+    must stop after ('a','bc') and replay the sequential reference
+    (without the stop it emitted ('eb','b') second)."""
+    from karna_spark.operators.bpe import _reference_merges
+
+    vocab = {
+        ("a", "bc", "bc"): 13,
+        ("a", "bc"): 27,
+        ("abc", "bc"): 20,
+        ("eb", "b"): 31,
+    }
+    want = _reference_merges(vocab, 4, 2)
+    assert [m[1:3] for m in want[:2]] == [("a", "bc"), ("abc", "bc")]
+    assert _py_batched_bpe(vocab, 4) == want
 
 
 def test_bpe_accept_batch_budget_and_done():
@@ -1446,9 +1474,9 @@ def test_bpe_accept_batch_budget_and_done():
         {"a": "c", "b": "d", "cnt": 50},
         {"a": "e", "b": "f", "cnt": 1},
     ]
-    acc, done = _accept_batch(top, 0, 2, budget=1)
+    acc, done = _accept_batch(top, 0, 2, budget=1, known=set())
     assert acc == [("a", "b", 100)] and not done
-    acc, done = _accept_batch(top, 0, 2, budget=10)
+    acc, done = _accept_batch(top, 0, 2, budget=10, known=set())
     # ('e','f') is disjoint and beats the (·,a)/(b,·)/(·,c)/(d,·)
     # bounds (none collected, cutoff 0) — a validated argmax below
     # min_pair_freq, so learning is DONE
@@ -1458,7 +1486,7 @@ def test_bpe_accept_batch_budget_and_done():
         {"a": "a", "b": "b", "cnt": 100},
         {"a": "ab", "b": "c", "cnt": 90},
     ]
-    acc, done = _accept_batch(top2, 0, 2, budget=10)
+    acc, done = _accept_batch(top2, 0, 2, budget=10, known=set())
     assert acc == [("a", "b", 100)] and not done
 
 

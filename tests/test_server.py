@@ -197,16 +197,56 @@ def test_index_serves_console(server):
     assert "query console" in html and "/query" in html
 
 
-def test_page_payload_releases_persisted_intermediates(spark):
-    # r6 verdict item 7: the server result path must release operator
-    # cache handles after materialization — callers can't be trusted
-    # to know the _karna_persisted contract.
-    from karna_spark.server import _page_payload
+def _stored_bytes(spark) -> int:
+    """Bytes of every cached RDD block (memory + disk) in the session,
+    read after the listener bus has applied the block updates."""
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    return sum(i.memSize() + i.diskSize() for i in jsc.getRDDStorageInfo())
 
-    cached = spark.range(10).persist()
-    cached.count()  # pin
-    df = cached.selectExpr("id * 2 AS x")
-    df._karna_persisted = [cached]
-    payload = _page_payload(df, {"limit": 5})
-    assert payload["row_count"] == 5
-    assert cached.storageLevel.useMemory is False  # unpersisted
+
+def test_requests_leave_no_cached_blocks(server, spark):
+    """A long-running server must not carry one request's cached
+    blocks into the next. Operator-backed NL intents pin intermediates
+    (MinHash's candidate/shingle caches, BM25's term frequencies);
+    after every POST /query the session's stored bytes must be back
+    at the pre-request baseline."""
+    bodies = [
+        {"language": "nl", "query": "find near-duplicate documents"},
+        {"language": "nl", "query": "top 5 documents matching query data"},
+        {
+            "query": "SELECT o_orderstatus, count(*) AS n FROM orders "
+            "GROUP BY o_orderstatus",
+            "order_by": ["o_orderstatus"],
+        },
+    ]
+    # Earlier tests in this session may have cached the same plans
+    # outside any scope; a request leaves such a cache to its owner,
+    # and filling its missing blocks would read as growth here.
+    spark.catalog.clearCache()
+    for i in range(21):
+        body = bodies[i % len(bodies)]
+        before = _stored_bytes(spark)
+        status, payload = _post(server, "/query", body)
+        assert status == 200, payload
+        assert payload["row_count"] > 0, body
+        assert _stored_bytes(spark) <= before, (i, body["query"])
+
+
+def test_status_classes(server, monkeypatch):
+    """Caller errors answer 400; an engine failure answers 500."""
+    status, body = _post(server, "/query", {"query": "SELECT 1", "limit": "x"})
+    assert status == 400 and "limit" in body["error"]
+    status, body = _post(server, "/query", {"query": "SELECT nope FROM region"})
+    assert status == 400 and "AnalysisException" in body["error"]
+    status, body = _post(server, "/query", {"query": "SELEC 1"})
+    assert status == 400
+
+    import karna_spark.server as server_mod
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("executor lost")
+
+    monkeypatch.setattr(server_mod, "_run_query", boom)
+    status, body = _post(server, "/query", {"query": "SELECT 1"})
+    assert status == 500 and "executor lost" in body["error"]
